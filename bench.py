@@ -1647,16 +1647,11 @@ def _bench_components_star(spark) -> dict:
     orders-derived synthetic graph as the pagerank section at
     x{SCALE_X}/x{SCALE100_X} (|E| grows linearly, topology modular so
     rounds stay ~constant — the star algorithm's whole point; the
-    measured n_rounds is recorded next to the wall).  The min-label
-    operator runs once at x{SCALE_X} on the same graph for honest
-    per-round-cost context (star pays 2 joins/round where min-label
-    pays 1 — star wins on ROUNDS, which modular graphs don't stress
-    and path graphs do; the 300-edge-path rounds contrast is pinned in
-    tests/test_components_star.py)."""
+    measured n_rounds is recorded next to the wall).  The long-path
+    rounds bound is pinned in tests/test_components_star.py."""
     from covid19i2b2_spark.caching import release_local_checkpoint
     from covid19i2b2_spark.operators.dedup_clusters import (
         connected_components,
-        connected_components_star,
     )
     from covid19i2b2_spark.sources.tables import read_table
 
@@ -1678,19 +1673,11 @@ def _bench_components_star(spark) -> dict:
         e = _edges(d)
         probe: dict = {}
         t0 = time.perf_counter()
-        labels = connected_components_star(e, plan_probe=probe)
+        labels = connected_components(e, plan_probe=probe)
         labels.write.format("noop").mode("overwrite").save()
         out[f"star_x{factor}_sec"] = round(time.perf_counter() - t0, 3)
         out[f"star_x{factor}_rounds"] = probe.get("n_rounds")
         release_local_checkpoint(labels)
-        if factor == SCALE_X:
-            t0 = time.perf_counter()
-            ml = connected_components(e, max_iter=25)
-            ml.write.format("noop").mode("overwrite").save()
-            out[f"minlabel_x{factor}_sec"] = round(
-                time.perf_counter() - t0, 3
-            )
-            release_local_checkpoint(ml)
         spark.catalog.clearCache()
     if SCALE100_X > 1:
         out["star_linear_ratio_x100_vs_x10"] = round(

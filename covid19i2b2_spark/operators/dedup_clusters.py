@@ -5,27 +5,18 @@ dedup needs the CLOSURE of those edges — A~B and B~C must collapse to one
 survivor even when A~C was never emitted.  This module turns the edge
 list into connected components and a deterministic keep/drop decision:
 
-- ``connected_components``: iterative min-label propagation over the
-  undirected edge list.  Each round joins every node's current label with
-  its neighbors' and takes the min — pure DataFrame ops (explode both
-  edge directions, groupBy min), converging in O(diameter) rounds.
-  Near-dup graphs are overwhelmingly tiny cliques/chains (diameter ≤ ~3),
-  so the loop exits after 2-4 bounded shuffles; ``max_iter`` caps
-  pathological chains and the loop stops early on a converged count.
-  Every iteration localCheckpoints the label frame: the lineage would
-  otherwise double per round (the classic iterative-Spark trap).
+- ``connected_components``: the alternating large-star/small-star
+  algorithm (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
+  "Connected Components in MapReduce and Beyond", SoCC 2014).  It
+  converges in O(log n) rounds on any topology, where min-label
+  propagation needs one round per hop of graph diameter — near-dup
+  graphs contain edit chains of dozens of hops, web alias graphs
+  longer ones.  Each round is ONE Spark action (the round's eager
+  localCheckpoint, which also carries the convergence signature), and
+  a graph that does not converge inside ``MAX_ROUNDS`` raises rather
+  than returning a partial merge.  Component = min reachable id.
 - ``dedup_decision``: component id + keep flag (survivor = min id in the
   component — same deterministic-survivor rule as exact_dedup).
-- ``connected_components_star`` (X78, round 12): the alternating
-  large-star/small-star algorithm (Kiveris, Lattanzi, Mirrokni,
-  Rastogi, Vassilvitskii, "Connected Components in MapReduce and
-  Beyond", SoCC 2014) — converges in O(log n) ROUNDS regardless of
-  diameter, where min-label propagation needs O(diameter).  Near-dup
-  graphs are tiny cliques and either works; WEB graphs (X55/X56's
-  host graphs, template chains) contain long paths where O(diameter)
-  is the difference between 8 rounds and 800.  Same output contract
-  as ``connected_components`` (component = min reachable id), pinned
-  equal by test.
 
 At 100 TB the edge list is vastly smaller than the corpus (only near-dup
 candidates appear); the per-round shuffle is edge-bounded, and the final
@@ -35,222 +26,138 @@ set is small, an equi-join otherwise (left to AQE).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
+
+# Round cap.  Observed rounds grow ~log2(n) (a 300-edge path takes ~10);
+# 64 rounds is past any real graph, so hitting it flags a bug.
+MAX_ROUNDS = 64
 
 
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 10,
-    cache_handles: list | None = None,
-) -> DataFrame:
-    """(node, component) for every node appearing in the edge list;
-    component = min node id reachable through the edges.
-
-    Checkpoint lifecycle (VERDICT r7 #6): each superseded label frame
-    is released IN-loop once the next one is materialized —
-    ``localCheckpoint()`` defaults to EAGER, so every new_labels
-    partition is computed at creation, before the ``changed`` count
-    job even runs (ADVICE r8 #3: do NOT flip these to eager=False and
-    rely on that count job — ``limit(1).count()`` does not compute all
-    partitions) — after which iteration N-1's frame is dead; the edge
-    frame is released on exit.  Only the FINAL label frame
-    outlives the call: with ``cache_handles`` its CheckpointHandle is
-    appended for the caller to release after materializing downstream;
-    without, the ContextCleaner frees it on GC as before."""
-    from covid19i2b2_spark.caching import (
-        CheckpointHandle,
-        release_local_checkpoint,
-    )
-
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .dropDuplicates()
-        .select("node", F.col("node").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges["dst"] == labels["node"])
-            .groupBy("src")
-            .agg(F.min("component").alias("__nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels["node"] == neighbor_min["src"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("__nbr_min", "component")
-                ).alias("component"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        # new_labels' EAGER checkpoint materialized in full at creation,
-        # so the previous round's frame can be freed NOW instead of
-        # waiting for GC — bounds live storage at 2 label frames
-        # regardless of iteration count
-        release_local_checkpoint(labels)
-        labels = new_labels
-        if changed == 0:
-            break
-    release_local_checkpoint(edges)
-    if cache_handles is not None:
-        cache_handles.append(CheckpointHandle(labels))
-    return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 25,
     cache_handles: list | None = None,
     plan_probe: dict | None = None,
 ) -> DataFrame:
-    """(node, component) via alternating large-star/small-star
-    (SoCC 2014) — O(log n) rounds on ANY topology (module docstring).
+    """(node, component) for every node appearing in the edge list;
+    component = min node id reachable through the edges.  Ids may be
+    any orderable type (longs, URL strings).
 
-    One round = large-star (per-node min over the full neighborhood,
-    strictly-larger neighbors relink to it: one groupBy + one join)
-    then small-star (edges oriented big→small, the small side plus the
-    key relink to the minimum: one groupBy + one join).  Convergence =
-    the small-star edge set reproduces itself, checked with one
-    (count, hash-sum) aggregate — no edge-set diff join.  The edge
-    frame is localCheckpoint'ed per round and the superseded round
-    released immediately (the connected_components lifecycle).
+    One round = large-star then small-star over the (hi, lo) edge set:
 
-    ``plan_probe``: receives ``n_rounds``.  Non-convergence inside
-    ``max_iter`` logs a WARNING and returns the partial merge — the
-    same honesty contract as min-label's cap, but at 25 rounds this
-    covers graphs of ~2^25 nodes, so hitting it flags a bug, not a
-    big graph."""
-    import logging
+    - large-star: each node u takes m = min(u, neighbors); every
+      neighbor above u relinks to m.
+    - small-star: each hi takes m = min of its lo's; hi and its lo's
+      relink to m.
 
+    Each step's minimum is a window partitioned on the key, so a round
+    is two keyed exchanges plus the edge dedup, with no join.  The
+    round's output is pinned by an eager localCheckpoint (the round's
+    only Spark action) with an Observation attached that reads the
+    (row count, bit_xor of xxhash64) set signature from the same pass;
+    the loop stops when a round reproduces the previous round's
+    signature, and raises ``RuntimeError`` after ``MAX_ROUNDS``.
+
+    Skew trade-off: a window partition holds a star root's whole
+    neighborhood, i.e. the whole component once the stars form.  It
+    spills and stays correct, but runs in one task, where a groupBy min
+    would get map-side partial aggregation.  Near-dup components are
+    small by construction (``dedup_cluster_stats`` alarms otherwise),
+    so the saved join and job per step is the better side here.
+
+    Checkpoint lifecycle: each superseded round is released in-loop
+    once the next one is materialized; only the label frame outlives
+    the call — with ``cache_handles`` its CheckpointHandle is appended
+    for the caller to release after materializing downstream.
+
+    ``plan_probe``: receives ``n_rounds`` and the first round's
+    physical plan (``round_plan``)."""
     from covid19i2b2_spark.caching import (
         CheckpointHandle,
         release_local_checkpoint,
     )
 
-    nodes = (
-        pairs.select(F.col(id_a).alias("node"))
-        .unionByName(pairs.select(F.col(id_b).alias("node")))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    edges = (
-        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(
-            F.greatest("a", "b").alias("hi"), F.least("a", "b").alias("lo")
-        )
-        .dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
+    # the input is read ONCE; self-loops stay in it so a node whose only
+    # edge is to itself still gets a label
+    raw = pairs.select(
+        F.greatest(id_a, id_b).alias("hi"), F.least(id_a, id_b).alias("lo")
+    ).localCheckpoint(eager=True)
+    edges = raw.filter(F.col("hi") != F.col("lo"))
     prev_sig: tuple | None = None
-    rounds = 0
-    for it in range(max_iter):
-        rounds = it + 1
+    for rounds in range(1, MAX_ROUNDS + 1):
         # --- large-star: key = every endpoint, full neighborhood ----
-        bi = edges.select(
-            F.col("hi").alias("u"), F.col("lo").alias("v")
-        ).unionByName(
-            edges.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
+        bi = edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+        bi = bi.unionByName(
+            bi.select(F.col("v").alias("u"), F.col("u").alias("v"))
         )
-        mins = bi.groupBy("u").agg(F.min("v").alias("__mn"))
-        m_l = F.least(F.col("u"), F.col("__mn"))
-        # pin the large-star output before small-star consumes it
-        # twice (the min aggregate AND the relink join): unpinned, the
-        # bi-join subtree replicated ~3x in the round's physical plan
-        # (7 joins observed where the algorithm has 2) — the exact
-        # double-evaluation class VERDICT r11 #1 flagged in HITS
+        m = F.least("u", F.min("v").over(Window.partitionBy("u")))
         large = (
-            bi.join(mins, "u")
+            bi.withColumn("__m", m)
             .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("hi"), F.col("__m").alias("lo"))
+        )
+        # --- small-star over the large output (hi > lo) -------------
+        # both emissions — (lo, m) and (hi, m) — via one array explode
+        small = (
+            large.withColumn(
+                "__m", F.min("lo").over(Window.partitionBy("hi"))
+            )
             .select(
-                F.col("v").alias("hi"), m_l.alias("lo")
+                F.explode(F.array("lo", "hi")).alias("hi"),
+                F.col("__m").alias("lo"),
             )
             .filter(F.col("hi") != F.col("lo"))
             .dropDuplicates()
-            .localCheckpoint(eager=True)
         )
-        # --- small-star over the large output (already hi>lo) -------
-        # both emission branches — (every small neighbor, m) and
-        # (the key, m) — come from ONE join via an array explode, so
-        # mins_s is consumed once
-        mins_s = large.groupBy("hi").agg(F.min("lo").alias("__m"))
-        small_pre = (
-            large.join(mins_s, "hi")
-            .select(
-                F.explode(F.array("lo", "hi")).alias("node"),
-                F.col("__m").alias("root"),
-            )
-            .filter(F.col("node") != F.col("root"))
-            .select(
-                F.col("node").alias("hi"), F.col("root").alias("lo")
-            )
-            .dropDuplicates()
-        )
-        if plan_probe is not None and it == 0:
-            # captured BEFORE the checkpoint (which replaces the plan
-            # with an RDD scan) — this is the round's real work
+        if plan_probe is not None and rounds == 1:
+            # before the checkpoint replaces the plan with an RDD scan
             plan_probe["round_plan"] = (
-                small_pre._jdf.queryExecution().executedPlan().toString()
+                small._jdf.queryExecution().executedPlan().toString()
             )
-        small = small_pre.localCheckpoint(eager=True)
-        release_local_checkpoint(large)
-        release_local_checkpoint(edges)
-        edges = small
-        # bit_xor: order-insensitive, overflow-free under ANSI (a SUM
-        # of xxhash64 values overflows long); rows are distinct, so
-        # xor is a faithful set signature
-        sig_row = edges.agg(
+        # bit_xor: order-insensitive and overflow-free under ANSI (a SUM
+        # of xxhash64 values overflows long); rows are distinct, so xor
+        # is a faithful set signature
+        obs = Observation()
+        small = small.observe(
+            obs,
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
                 F.bit_xor(F.xxhash64("hi", "lo")), F.lit(0)
             ).alias("h"),
-        ).collect()[0]
-        sig = (sig_row["n"], sig_row["h"])
-        if sig == prev_sig:
+        ).localCheckpoint(eager=True)
+        if rounds > 1:
+            release_local_checkpoint(edges)
+        edges = small
+        sig = (obs.get["n"], obs.get["h"])
+        if sig == prev_sig or sig[0] == 0:
             break
         prev_sig = sig
     else:
-        logging.getLogger(__name__).warning(
-            "connected_components_star: no convergence in %d rounds "
-            "(edge signature still moving) — returning partial merge",
-            max_iter,
+        release_local_checkpoint(raw)
+        release_local_checkpoint(edges)
+        raise RuntimeError(
+            f"connected_components: no convergence in {MAX_ROUNDS} rounds "
+            "(edge signature still moving)"
         )
     if plan_probe is not None:
         plan_probe["n_rounds"] = rounds
+    # converged: a star per component, hi -> its root; roots and
+    # self-loop-only nodes label themselves
     labels = (
-        nodes.join(
-            edges.select(
-                F.col("hi").alias("node"), F.col("lo").alias("__root")
-            ),
-            "node",
-            "left",
+        edges.select(F.col("hi").alias("node"), F.col("lo").alias("c"))
+        .unionByName(
+            edges.select(F.col("lo").alias("node"), F.col("lo").alias("c"))
         )
-        .select(
-            "node", F.coalesce("__root", F.col("node")).alias("component")
+        .unionByName(
+            raw.filter(F.col("hi") == F.col("lo"))
+            .select(F.col("hi").alias("node"), F.col("hi").alias("c"))
         )
+        .groupBy("node")
+        .agg(F.min("c").alias("component"))
         .localCheckpoint(eager=True)
     )
-    release_local_checkpoint(nodes)
+    release_local_checkpoint(raw)
     release_local_checkpoint(edges)
     if cache_handles is not None:
         cache_handles.append(CheckpointHandle(labels))
@@ -263,7 +170,6 @@ def dedup_decision(
     id_col: str,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 10,
     cache_handles: list | None = None,
 ) -> DataFrame:
     """Corpus + near-dup edges -> (id, component, keep).  Nodes outside
@@ -272,7 +178,7 @@ def dedup_decision(
     ``cache_handles`` receives the component frame's CheckpointHandle
     (see connected_components)."""
     comp = connected_components(
-        pairs, id_a, id_b, max_iter, cache_handles=cache_handles
+        pairs, id_a, id_b, cache_handles=cache_handles
     ).withColumnRenamed("node", id_col)
     return df.join(comp, id_col, "left").select(
         id_col,
@@ -321,7 +227,6 @@ def dedup_decision_by(
     descending: bool = True,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 10,
     cache_handles: list | None = None,
 ) -> DataFrame:
     """:func:`dedup_decision` with a QUALITY-AWARE survivor: within
@@ -334,7 +239,7 @@ def dedup_decision_by(
     longest member of each duplicate cluster for exactly this reason).
 
     Shape: the component labels come from the same edge-bounded
-    min-label propagation; the survivor pick is ONE window over the
+    :func:`connected_components`; the survivor pick is ONE window over the
     decision frame partitioned by component — components are tiny by
     construction (the cluster-size audit alarms otherwise), so the
     window never concentrates meaningful data in one task.  A NULL
@@ -343,7 +248,7 @@ def dedup_decision_by(
     from pyspark.sql.window import Window
 
     comp = connected_components(
-        pairs, id_a, id_b, max_iter, cache_handles=cache_handles
+        pairs, id_a, id_b, cache_handles=cache_handles
     ).withColumnRenamed("node", id_col)
     labeled = df.join(comp, id_col, "left").select(
         F.col(id_col),

@@ -681,8 +681,8 @@ class DedupIndex:
                 self._resources.append(flagged)
                 maybe_dup = flagged.filter(F.col("__mc")).drop("__mc")
                 definitely_new = flagged.filter(~F.col("__mc")).drop("__mc")
-            maybe_dup = maybe_dup.persist()
-            self._resources.append(maybe_dup)
+            # maybe_dup is a filter over the persisted flagged frame: its
+            # count and the joins below re-read that storage
             if maybe_dup.count() <= fp_cap:
                 # confirmed dup fingerprints via a broadcast SEMI join
                 # built from the candidates: the index streams map-side,

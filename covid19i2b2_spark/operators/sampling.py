@@ -237,7 +237,6 @@ def leakage_safe_split(
     id_col: str,
     fractions: dict[str, float],
     seed: int = 42,
-    max_iter: int = 10,
 ) -> DataFrame:
     """Train/val/test split that NEVER separates near-duplicates: route
     every document by its near-dup component id (connected components
@@ -253,9 +252,7 @@ def leakage_safe_split(
         connected_components,
     )
 
-    comp = connected_components(pairs, max_iter=max_iter).withColumnRenamed(
-        "node", id_col
-    )
+    comp = connected_components(pairs).withColumnRenamed("node", id_col)
     routed = df.join(comp, id_col, "left").withColumn(
         "component", F.coalesce("component", F.col(id_col))
     )

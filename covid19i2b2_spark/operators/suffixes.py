@@ -1316,7 +1316,7 @@ def span_candidate_clusters(
     ``probe``: n_window_positions / n_dup_hashes / component rounds
     (``cc_rounds``)."""
     from covid19i2b2_spark.operators.dedup_clusters import (
-        connected_components_star,
+        connected_components,
     )
 
     if min_len < 1:
@@ -1373,9 +1373,7 @@ def span_candidate_clusters(
         )
     )
     cc_probe: dict = {}
-    comp = connected_components_star(
-        edges, "a", "b", plan_probe=cc_probe
-    )
+    comp = connected_components(edges, "a", "b", plan_probe=cc_probe)
     doc_nodes = comp.filter(
         F.col("node").bitwiseAND(F.lit(1)) == F.lit(0)
     ).select(

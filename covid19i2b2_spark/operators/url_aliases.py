@@ -132,7 +132,7 @@ def unify_aliases(
     relabel the corpus with a left join + coalesce(canonical_id,
     url)."""
     from covid19i2b2_spark.operators.dedup_clusters import (
-        connected_components_star,
+        connected_components,
     )
 
     if not edge_frames:
@@ -146,7 +146,7 @@ def unify_aliases(
                 F.col("src").cast("string"), F.col("dst").cast("string")
             )
         )
-    labels = connected_components_star(
+    labels = connected_components(
         union.filter(
             F.col("src").isNotNull() & F.col("dst").isNotNull()
         ),

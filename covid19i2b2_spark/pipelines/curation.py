@@ -16,7 +16,9 @@ isolation:
                        (X91; cost ∝ candidate bytes, not corpus bytes)
       -> exact_dedup   collapse byte-identical documents (content hash)
       -> MinHash+LSH   near-dup pair graph (Arrow signature kernel)
-      -> components    transitive closure, min-id survivor per group
+      -> components    transitive closure (large/small-star, O(log n)
+                       rounds; raises at the round cap), min-id
+                       survivor per group
       -> contamination drop docs overlapping the eval/benchmark set
     [perplexity gate]  optional: keep the best frac of survivors by
                        Kneser–Ney trigram log-prob (X93, CCNet-style;

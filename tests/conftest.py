@@ -22,11 +22,20 @@ def spark(tmp_path_factory):
     # ad-hoc conf experiments without editing this file:
     # TEST_EXTRA_CONF="k=v;k2=v2" python -m pytest ...
     for kv in filter(None, os.environ.get("TEST_EXTRA_CONF", "").split(";")):
-        k, v = kv.split("=", 1)
+        k, sep, v = kv.partition("=")
+        if not sep or not k:
+            raise ValueError(
+                f"malformed TEST_EXTRA_CONF entry {kv!r}: expected key=value"
+            )
         extra[k] = v
+    # task threads follow SPARK_GRAFT_CPUS (the tier-1 command exports
+    # nproc), clamped to 4..8: 8 threads on a 4-core box only queue, and
+    # at least 4 keeps every multi-partition path exercised
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
+    threads = min(8, max(4, int(cpus))) if cpus.isdigit() else 8
     spark = get_spark(
         app_name="covid19i2b2-tests",
-        master="local[8]",
+        master=f"local[{threads}]",
         shuffle_partitions=8,
         # ONE driver JVM serves the whole ~680-test suite (~40k stages):
         # accumulated cached relations (pipelines cache cohort frames and

@@ -89,7 +89,7 @@ def test_spec_identity_fields():
     assert s.n_bits == 64
 
 
-def test_filter_batch_bloom_matches_exact(spark, tmp_path):
+def test_filter_batch_bloom_matches_exact(spark, tmp_path, monkeypatch):
     """The dedup-path integration contract: bloom_fpp on/off produce
     IDENTICAL (survivors, dropped) — the bloom only prunes rows the
     exact joins would reject anyway.  Corpus plants exact dups, near
@@ -99,8 +99,26 @@ def test_filter_batch_bloom_matches_exact(spark, tmp_path):
     built index and ONE no-bloom reference (round 16: the former
     3-param form rebuilt the identical index and reference per param,
     tripling the wall inside the driver's pytest window); rebuild mode
-    runs first, before any blooms are persisted."""
+    runs first, before any blooms are persisted.  Each mode also
+    asserts WHICH gate fired, so a mode cannot quietly fall back to
+    another gate and still pass the equality."""
+    from covid19i2b2_spark.operators import bloom, bloom_sharded
     from covid19i2b2_spark.operators.dedup_incremental import DedupIndex
+
+    fired: list[str] = []
+
+    def spy(mod, name, tag):
+        real = getattr(mod, name)
+
+        def wrapped(*args, **kwargs):
+            fired.append(tag)
+            return real(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, wrapped)
+
+    spy(bloom, "build_bloom", "build")
+    spy(bloom, "might_contain", "flat")
+    spy(bloom_sharded, "sharded_bloom_flags", "sharded")
 
     base = (
         "the quick brown fox jumps over the lazy dog while the band "
@@ -139,10 +157,18 @@ def test_filter_batch_bloom_matches_exact(spark, tmp_path):
             idx.write_blooms(spark, fpp=0.01)
         elif mode == "sharded":
             idx.write_blooms(spark, fpp=0.01, sharded=4)
+        fired.clear()
         s1, d1 = idx.filter_batch(
             spark, batch, "doc_id", "text", bloom_fpp=0.01
         )
         assert {r["doc_id"] for r in s1.collect()} == want_s, mode
+        # fingerprint + band gate per batch: rebuild builds both flat
+        # blooms, flat reads the persisted ones, sharded probes shards
+        assert sorted(fired) == {
+            "rebuild": ["build", "build", "flat", "flat"],
+            "flat": ["flat", "flat"],
+            "sharded": ["sharded", "sharded"],
+        }[mode], (mode, fired)
         got_d = {(r["doc_id"], r["reason"]) for r in d1.collect()}
         assert got_d == want_d, mode
         # the planted exact dups were caught (bloom did not mask them)

@@ -243,12 +243,13 @@ def test_warm_start_converges_in_one_pass_same_fixpoint(spark):
     )
     warm2 = {
         r["node"]: r["rank"]
-        for r in pagerank(e, tol=1e-3, n_iter=100,
+        for r in pagerank(e, tol=1e-4, n_iter=100,
                           init_ranks=stale).collect()
     }
-    # both runs sit within ~tol/(1-d) of the one true fixpoint
+    # cold (tol 1e-3) sits ~2e-4 per node from the one true fixpoint
+    # and this run (tol 1e-4) ~2e-5, so the two agree well inside 1e-3
     for v in cold_map:
-        assert warm2[v] == pytest.approx(cold_map[v], abs=1e-2), v
+        assert warm2[v] == pytest.approx(cold_map[v], abs=1e-3), v
     assert sum(warm2.values()) == pytest.approx(1.0, abs=1e-9)
     # the guard can only trip when EVERY node is covered (uncovered
     # nodes seed at 1/n > 0 by design)
