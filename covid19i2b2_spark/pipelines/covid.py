@@ -9,8 +9,10 @@ empty at survey time — see SURVEY.md §0).  Three stages:
    admission) -> death from patient_dimension.
 2. six aggregate artifacts (~L520-920): DailyCounts, ClinicalCourse,
    Demographics, Labs, Diagnoses, Medications — mutually independent given
-   the cohort (the reference runs them sequentially; here each is a lazy
-   plan over the cached cohort, so Spark runs them embarrassingly parallel).
+   the cohort.  The reference runs them sequentially; ``export`` first
+   materializes the cached cohort on the calling thread, then builds and
+   writes each artifact on its own driver thread, so their Spark jobs
+   share the cluster under the default FIFO scheduler (see ``export``).
 3. obfuscation + export (~L920-1100): blur/mask/delete per config, ordered
    CSV per artifact.
 
@@ -650,32 +652,69 @@ class CovidPipeline:
         "Medications": ["med_class"],
     }
 
-    def all_artifacts(self) -> dict[str, DataFrame]:
-        arts = {
-            "DailyCounts": self.daily_counts(),
-            "ClinicalCourse": self.clinical_course(),
-            "Demographics": self.demographics(),
-            "Labs": self.labs(),
-            "Diagnoses": self.diagnoses(),
-            "Medications": self.medications(),
-        }
+    def artifact(self, name: str) -> DataFrame:
+        """The lazy plan of one artifact (a ``KEY_COLS`` name), obfuscated
+        when the config asks for it."""
+        build = {
+            "DailyCounts": self.daily_counts,
+            "ClinicalCourse": self.clinical_course,
+            "Demographics": self.demographics,
+            "Labs": self.labs,
+            "Diagnoses": self.diagnoses,
+            "Medications": self.medications,
+        }[name]
+        df = build()
         if self.cfg.obfuscation is not None:
-            arts = {
-                name: obfuscate_counts(
-                    df, self.COUNT_COLS[name], self.KEY_COLS[name], self.cfg.obfuscation
-                )
-                for name, df in arts.items()
-            }
-        return arts
+            df = obfuscate_counts(
+                df, self.COUNT_COLS[name], self.KEY_COLS[name], self.cfg.obfuscation
+            )
+        return df
+
+    def all_artifacts(self) -> dict[str, DataFrame]:
+        return {name: self.artifact(name) for name in self.KEY_COLS}
 
     def export(self, out_dir: str, single_file: bool = True) -> None:
-        """S4: ordered CSV per artifact."""
+        """S4: ordered CSV per artifact, the six written concurrently.
+
+        The cohort is materialized first, on the calling thread, so its
+        caches (concept events, admissions, cohort) fill once and no
+        writer thread races the memo in :meth:`cohort`.  Then each
+        artifact is built and written on its own thread: plan building
+        overlaps too, and each thread inherits the caller's local
+        properties and tags (job group, description), so every job stays
+        attributed to the caller.  All threads are waited for; the first
+        failure in artifact order is then re-raised, so ``export`` never
+        returns while a writer is still running.
+
+        Why this holds at 100 TB: under the default FIFO scheduler each
+        artifact's big stages still fan out over the whole cluster; the
+        concurrency only fills the slots a sequential driver leaves idle
+        (the single-task sort/write tail of each ``coalesce(1)`` CSV and
+        the driver's planning gaps between jobs)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark import inheritable_thread_target
+
         from covid19i2b2_spark.sources.sinks import write_csv
 
-        for name, df in self.all_artifacts().items():
+        def write(name: str) -> None:
             write_csv(
-                df,
+                self.artifact(name),
                 f"{out_dir}/{name}",
                 order_by=self.KEY_COLS[name],
                 single_file=single_file,
             )
+
+        self.cohort().count()
+        with ThreadPoolExecutor(
+            len(self.KEY_COLS), thread_name_prefix="covid-export"
+        ) as pool:
+            # wrapped once per artifact: each thread gets its own copy of
+            # the caller's local properties (Spark SQL sets its execution
+            # id there, so threads must not share one Properties object)
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(write), name)
+                for name in self.KEY_COLS
+            ]
+        for future in futures:
+            future.result()

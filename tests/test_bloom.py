@@ -42,7 +42,7 @@ def test_no_false_negatives_and_fpp_band(spark):
     assert fp / 50_000 < 0.03, fp  # ~1% target, loose band
 
 
-def test_bloom_deterministic_and_seeded(spark):
+def test_bloom_deterministic_and_seeded(spark, monkeypatch):
     """Same (keys, seed) -> byte-identical bitmap regardless of
     partitioning; a different seed produces a different bitmap."""
     a = build_bloom(
@@ -55,13 +55,16 @@ def test_bloom_deterministic_and_seeded(spark):
         "k",
     )
     assert a.bits == b.bits and a.n_hashes == b.n_hashes
-    # 300 partitions exercises the executor-side OR-reduce (300
-    # partials streamed into 16 reduce tasks) — bits must not depend
-    # on the reduction shape
+    # more partitions than the OR fan-in exercises the executor-side
+    # OR-reduce (20 partials streamed into 3 reduce tasks) — bits must
+    # not depend on the reduction shape
+    from covid19i2b2_spark.operators import bloom
+
+    monkeypatch.setattr(bloom, "_OR_FANIN", 3)
     t = build_bloom(
         spark.range(10_000)
         .selectExpr("cast(id as string) as k")
-        .repartition(300),
+        .repartition(20),
         "k",
     )
     assert t.bits == a.bits

@@ -4,18 +4,24 @@ cumulatives, W1 ≡ J7 self-join equivalence, export round-trip)."""
 
 from __future__ import annotations
 
+import threading
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from covid19i2b2_spark.operators.obfuscation import ObfuscationConfig
 from covid19i2b2_spark.pipelines.covid import CovidConfig, CovidPipeline
 from covid19i2b2_spark.pipelines.fixture import make_fixture
+from covid19i2b2_spark.sources.sinks import write_csv
 
 N = 200
+OBFUSCATED = CovidConfig(
+    obfuscation=ObfuscationConfig(blur=2, small_count_mask=10, seed=7)
+)
 
 
-@pytest.fixture(scope="module")
-def pipe(spark):
+def _pipeline(spark, cfg: CovidConfig) -> CovidPipeline:
     fx = make_fixture(spark, n_patients=N)
     d = fx["observation_fact"].withColumn("start_date", F.to_date("start_date"))
     pats = fx["patient_dimension"].withColumn("death_date", F.to_date("death_date"))
@@ -24,7 +30,12 @@ def pipe(spark):
         .withColumn("start_date", F.to_date("start_date"))
         .withColumn("end_date", F.to_date("end_date"))
     )
-    return CovidPipeline(CovidConfig(), d, pats, vis)
+    return CovidPipeline(cfg, d, pats, vis)
+
+
+@pytest.fixture(scope="module")
+def pipe(spark):
+    return _pipeline(spark, CovidConfig())
 
 
 def test_cohort_ground_truth(pipe):
@@ -125,18 +136,7 @@ def test_medications_map(pipe):
 
 
 def test_obfuscated_export_round_trip(spark, tmp_path):
-    fx = make_fixture(spark, n_patients=N)
-    cfg = CovidConfig(
-        obfuscation=ObfuscationConfig(blur=2, small_count_mask=10, seed=7)
-    )
-    d = fx["observation_fact"].withColumn("start_date", F.to_date("start_date"))
-    pats = fx["patient_dimension"].withColumn("death_date", F.to_date("death_date"))
-    vis = (
-        fx["visit_dimension"]
-        .withColumn("start_date", F.to_date("start_date"))
-        .withColumn("end_date", F.to_date("end_date"))
-    )
-    pipe = CovidPipeline(cfg, d, pats, vis)
+    pipe = _pipeline(spark, OBFUSCATED)
     out = str(tmp_path / "export")
     pipe.export(out)
     demo = spark.read.option("header", True).csv(f"{out}/Demographics")
@@ -147,8 +147,69 @@ def test_obfuscated_export_round_trip(spark, tmp_path):
         v = int(r.num_patients_all)
         assert v == -99 or v >= 0
     # deterministic: a second pipeline produces byte-identical artifact
-    pipe2 = CovidPipeline(cfg, d, pats, vis)
+    pipe2 = _pipeline(spark, OBFUSCATED)
     demo2 = pipe2.all_artifacts()["Demographics"]
     a = sorted(map(str, pipe.all_artifacts()["Demographics"].collect()))
     b = sorted(map(str, demo2.collect()))
     assert a == b
+
+
+def _csv_bytes(path: Path) -> bytes:
+    return b"".join(p.read_bytes() for p in sorted(path.glob("part-*")))
+
+
+@pytest.mark.parametrize("cfg", [CovidConfig(), OBFUSCATED], ids=["plain", "obfuscated"])
+def test_export_matches_sequential_writes(spark, tmp_path, cfg):
+    """export() writes the six artifacts concurrently; every CSV must be
+    byte-identical to writing that all_artifacts() frame through
+    write_csv on its own."""
+    pipe = _pipeline(spark, cfg)
+    pipe.export(str(tmp_path / "export"))
+    for name, df in pipe.all_artifacts().items():
+        seq = tmp_path / "sequential" / name
+        write_csv(df, str(seq), order_by=pipe.KEY_COLS[name], single_file=True)
+        got = _csv_bytes(tmp_path / "export" / name)
+        assert got and got == _csv_bytes(seq), name
+
+
+def test_export_failure_raised_after_every_writer_finished(pipe, tmp_path, monkeypatch):
+    def broken():
+        raise RuntimeError("labs failed")
+
+    monkeypatch.setattr(pipe, "labs", broken)
+    out = tmp_path / "export"
+    with pytest.raises(RuntimeError, match="labs failed"):
+        pipe.export(str(out))
+    assert not [t for t in threading.enumerate() if t.name.startswith("covid-export")]
+    # the other five writers ran to completion, none was abandoned
+    written = {p.parent.name for p in out.glob("*/_SUCCESS")}
+    assert written == set(pipe.KEY_COLS) - {"Labs"}
+
+
+def test_export_jobs_carry_callers_job_group(spark, pipe, tmp_path):
+    """Every job export() launches, from any of its writer threads, is
+    listed under the caller's job group (what per-operator job tagging
+    relies on)."""
+    from covid19i2b2_spark.operators.dedup import drain_cap_logs
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker_job(group: str) -> int:
+        sc.setJobGroup(group, group)
+        sc.parallelize([0], 1).count()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(tracker.getJobIdsForGroup(group))
+
+    # earlier tests' background cap-warning jobs would land in the window
+    drain_cap_logs()
+    try:
+        before = marker_job("export-test-before")
+        sc.setJobGroup("export-test", "covid export")
+        pipe.export(str(tmp_path / "export"))
+        after = marker_job("export-test-after")
+    finally:
+        sc._jsc.clearJobGroup()
+    launched = set(range(before + 1, after))
+    assert launched
+    assert set(tracker.getJobIdsForGroup("export-test")) == launched
